@@ -29,24 +29,15 @@ def _read(path: str, columns: list[str]) -> pd.DataFrame:
 
 
 def check_ingest(report: Report, manifest: dict, out_dir: str) -> None:
-    """Table rows, matched / request-only counts, enriched msisdn on
-    matched rows, and one ``processed`` ledger row per input file that
-    decoded anything, carrying that file's decoded-message count."""
+    """Diameter ingest output against the manifest: table rows, matched /
+    request-only counts, enriched msisdn on matched rows, and one
+    ``processed`` ledger row per input file that decoded anything,
+    carrying that file's decoded-message count."""
     tag = os.path.basename(out_dir)
-    if manifest["family"] == "diameter":
-        t = _read(os.path.join(out_dir, "table"), ["session_id", "hop_by_hop_id", "matched", "msisdn"])
-        matched = t[t["matched"]]
-        n_matched, n_req_only = len(matched), int((~t["matched"]).sum())
-        keys = matched["session_id"] + "|" + matched["hop_by_hop_id"].astype(str)
-    else:
-        t = _read(os.path.join(out_dir, "table"),
-                  ["file", "operation_id", "http_is_request", "http_response_in", "msisdn"])
-        req = t[t["http_is_request"]]
-        answered = req["http_response_in"].notna()
-        n_matched, n_req_only = int(answered.sum()), int((~answered).sum())
-        answered_ops = set(req.loc[answered, "operation_id"].astype(int))
-        matched = t[t["operation_id"].astype(int).isin(answered_ops)]
-        keys = matched["file"].map(os.path.basename) + "|" + matched["operation_id"].astype(int).astype(str)
+    t = _read(os.path.join(out_dir, "table"), ["session_id", "hop_by_hop_id", "matched", "msisdn"])
+    matched = t[t["matched"]]
+    n_matched, n_req_only = len(matched), int((~t["matched"]).sum())
+    keys = matched["session_id"] + "|" + matched["hop_by_hop_id"].astype(str)
     report.check(len(t) == manifest["table_rows"], f"{tag}: table rows {len(t)} != {manifest['table_rows']}")
     report.check(n_matched == manifest["matched"], f"{tag}: matched {n_matched} != {manifest['matched']}")
     report.check(n_req_only == manifest["request_only"],

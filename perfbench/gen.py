@@ -32,7 +32,7 @@ if ROOT not in sys.path:
 
 from ingestor_etl_spark import capturegen as g  # noqa: E402
 
-WORKLOADS = ("diameter_mixed", "http_ocs_noisy", "registry_cold")
+WORKLOADS = ("diameter_mixed", "registry_cold")
 
 EPOCH_S = 1_700_000_000
 DIAMETER_PORT = 3868
@@ -40,15 +40,16 @@ APP_GX, APP_GY = 16777238, 4
 CMD_CC, CMD_DW = 272, 280
 
 # Sizes at scale 1.0 (see perfbench/README.md for the reasoning).
-DIAMETER_SESSIONS = 200  # ~1.4k CCR/CCA messages plus watchdogs
+DIAMETER_SESSIONS = 500  # ~3.5k CCR/CCA messages plus watchdogs
+DIAMETER_WARM_SESSIONS = 24  # warm-up input: same layout, ~170 messages
 DIAMETER_FILES = 8
 DIAMETER_ASSOCS = 32
-HTTP_FILES = 64
-HTTP_EXCHANGES_PER_FILE = 10  # 640 exchanges, ~9k frames
+DIAMETER_NOISE = 0.1  # share of frames that carry no Diameter
 REGISTRY_ROWS = 20_000  # lineitem rows; other tables scale from it
-# Cold passes per run, each over its own tables: a second pass over the
-# same tables would hit the IVF training memo, which is keyed by the data.
-REGISTRY_PASSES = 2
+REGISTRY_WARM_ROWS = 500
+# Timed table sets, one per cold pass: a second pass over the same
+# tables would hit the IVF training memo, which is keyed by the data.
+REGISTRY_SETS = 6
 
 # Registry queries timed by registry_cold, in run order: one per
 # registry module the headline set touches; ann_ivf carries the IVF
@@ -88,7 +89,7 @@ def _tcp_frame(src, dst, sport, dport, seq, ack, flags, payload=b"") -> bytes:
 
 
 def _noise_frame(rng: random.Random) -> bytes:
-    """A frame the signalling pipelines must discard: not IPv4, UDP on
+    """A frame the Diameter pipeline must discard: not IPv4, UDP on
     another port, or TCP payload on another port."""
     kind = rng.random()
     if kind < 0.25:  # ARP
@@ -298,6 +299,10 @@ def gen_diameter(out: str, seed: int, n_sessions: int, n_files: int, n_assocs: i
     for a in assocs:
         if a.sends:
             (_emit_sctp if a.sctp else _emit_tcp)(a, caps[a.file], rng)
+    for cap in caps:  # other traffic on the tapped link
+        n_noise = round(len(cap.frames) * DIAMETER_NOISE / (1 - DIAMETER_NOISE))
+        for _ in range(n_noise):
+            cap.add(EPOCH_S * 1_000_000 + rng.randrange(0, 60_000_000), _noise_frame(rng))
     for f, cap in enumerate(caps):
         files[f]["frames"] = len(cap.frames)
         with open(os.path.join(out, files[f]["name"]), "wb") as fh:
@@ -309,108 +314,6 @@ def gen_diameter(out: str, seed: int, n_sessions: int, n_files: int, n_assocs: i
         "frames": sum(f["frames"] for f in files),
         "decoded_messages": total,
         "table_rows": len(txns),
-        "matched": matched,
-        "request_only": len(txns) - matched,
-        "msisdn": {k: v["msisdn"] for k, v in txns.items() if v["matched"]},
-    }
-
-
-# ---------------------------------------------------------------- HTTP OCS
-_OCS_KINDS = ("mo-acr", "mo-idp", "volte-acr", "volte-idp")
-
-
-def _http_request(kind: str, op_id: int, msisdn: str, called: str, calling: str) -> bytes:
-    body = (
-        f'<?xml version="1.0" encoding="UTF-8"?><{kind}-request id="{op_id}">'
-        f"<msisdn>{msisdn}</msisdn><cdpa>{called}</cdpa><called>{called}</called>"
-        f"<calling>{calling}</calling><periodduration>60</periodduration>"
-        f"<callactive>true</callactive><starttime>2026-01-01T00:00:00Z</starttime>"
-        f"</{kind}-request>"
-    ).encode()
-    head = (
-        "POST /ocs/v1/charging HTTP/1.1\r\nHost: ocs.example.net:8080\r\n"
-        f"Content-Type: text/xml\r\nContent-Length: {len(body)}\r\n\r\n"
-    ).encode()
-    return head + body
-
-
-def _http_response(kind: str, op_id: int) -> bytes:
-    body = (
-        f'<?xml version="1.0" encoding="UTF-8"?><{kind}-response id="{op_id}">'
-        "<status>OK</status><status_code>0</status_code>"
-        "<maxcallperiodduration>3600</maxcallperiodduration>"
-        f"</{kind}-response>"
-    ).encode()
-    head = (
-        f"HTTP/1.1 200 OK\r\nContent-Type: text/xml\r\nContent-Length: {len(body)}\r\n\r\n"
-    ).encode()
-    return head + body
-
-
-def gen_http(out: str, seed: int, n_files: int, per_file: int, noise_ratio: float = 4.0) -> dict:
-    """HTTP/1.1 OCS XML exchanges over keep-alive TCP connections in
-    ``n_files`` equal captures, ~80% of frames noise."""
-    rng = random.Random(seed)
-    os.makedirs(out, exist_ok=True)
-    files, txns = [], {}
-    op_id = rng.randrange(10**6)
-    for f in range(n_files):
-        cap = Capture()
-        name = f"ocs_{f:02d}.pcap"
-        t_file = EPOCH_S * 1_000_000 + f * 1_000
-        left, conn = per_file, 0
-        n_msgs = 0
-        signalling = 0
-        while left:
-            conn += 1
-            k = min(left, rng.randrange(2, 7))
-            left -= k
-            client, server = _ip("10.3", f * 64 + conn), _ip("10.4", conn % 3 + 1)
-            cport, sport = rng.randrange(30000, 60000), 8080
-            cseq, sseq = rng.getrandbits(31), rng.getrandbits(31)
-            t = t_file + rng.randrange(0, 5_000_000)
-            for j in range(k):
-                op_id += 1
-                kind = rng.choice(_OCS_KINDS)
-                msisdn = f"52133{rng.randrange(10**7):07d}"
-                req = _http_request(kind, op_id, msisdn, f"55{rng.randrange(10**8):08d}",
-                                    f"52133{rng.randrange(10**7):07d}")
-                cut = rng.randrange(len(req) - 120, len(req) - 20)  # split inside the body
-                for part in (req[:cut], req[cut:]):
-                    cap.add(t, _tcp_frame(client, server, cport, sport, cseq, sseq, 24, part))
-                    cseq += len(part)
-                    t += 300
-                    signalling += 1
-                cap.add(t, _tcp_frame(server, client, sport, cport, sseq, cseq, 16))  # ACK
-                # An unanswered request is the last on its connection: a
-                # following request would reuse its ack number as pair key.
-                answered = not (j == k - 1 and rng.random() < 0.08)
-                n_msgs += 1
-                if answered:
-                    res = _http_response(kind, op_id)
-                    t += rng.randrange(1_000, 30_000)
-                    cap.add(t, _tcp_frame(server, client, sport, cport, sseq, cseq, 24, res))
-                    sseq += len(res)
-                    signalling += 1
-                    n_msgs += 1
-                    cap.add(t + 200, _tcp_frame(client, server, cport, sport, cseq, sseq, 16))
-                txns[f"{name}|{op_id}"] = {"matched": answered, "msisdn": msisdn}
-                t += rng.randrange(10_000, 200_000)
-        # Noise so that ~80% of all frames carry no signalling.
-        n_noise = round(signalling * noise_ratio) - (len(cap.frames) - signalling)
-        for _ in range(max(0, n_noise)):
-            cap.add(t_file + rng.randrange(0, 8_000_000), _noise_frame(rng))
-        files.append({"name": name, "frames": len(cap.frames), "messages": n_msgs})
-        with open(os.path.join(out, name), "wb") as fh:
-            fh.write(cap.to_pcap())
-    matched = sum(1 for t in txns.values() if t["matched"])
-    return {
-        "family": "http_ocs",
-        "files": files,
-        "frames": sum(f["frames"] for f in files),
-        "decoded_messages": sum(f["messages"] for f in files),
-        # every request and every response is one table row
-        "table_rows": len(txns) + matched,
         "matched": matched,
         "request_only": len(txns) - matched,
         "msisdn": {k: v["msisdn"] for k, v in txns.items() if v["matched"]},
@@ -543,25 +446,22 @@ def expected_results(sf_dir: str, names: list[str], out: str) -> None:
 
 def generate(workload: str, seed: int, out: str, scale: float = 1.0) -> dict:
     """Write the warm-up and timed inputs of ``workload`` under ``out``
-    and return (and store) the manifest."""
+    and return (and store) the manifest of the timed input."""
     warm_seed = seed + 1_000_003  # warm-up input shares nothing with the timed one
-    # The warm-up input has the timed input's shape and size, so warm-up
-    # compiles and spawns what the timed runs need.
+    # The warm-up input is small but has the timed input's layout, so it
+    # runs the same code paths.
     if workload == "diameter_mixed":
+        gen_diameter(os.path.join(out, "warm"), warm_seed, DIAMETER_WARM_SESSIONS,
+                     DIAMETER_FILES, DIAMETER_ASSOCS)
         n = max(16, round(DIAMETER_SESSIONS * scale))
-        for sub, s in (("warm", warm_seed), ("timed", seed)):
-            manifest = gen_diameter(os.path.join(out, sub), s, n, DIAMETER_FILES, DIAMETER_ASSOCS)
-    elif workload == "http_ocs_noisy":
-        per_file = max(2, round(HTTP_EXCHANGES_PER_FILE * scale))
-        for sub, s in (("warm", warm_seed), ("timed", seed)):
-            manifest = gen_http(os.path.join(out, sub), s, HTTP_FILES, per_file)
+        manifest = gen_diameter(os.path.join(out, "timed"), seed, n, DIAMETER_FILES, DIAMETER_ASSOCS)
     elif workload == "registry_cold":
-        rows = max(500, round(REGISTRY_ROWS * scale))
-        gen_tables(os.path.join(out, "warm"), warm_seed, 500)
-        for p in range(REGISTRY_PASSES):
-            tables = os.path.join(out, "timed", f"pass{p}")
+        rows = max(REGISTRY_WARM_ROWS, round(REGISTRY_ROWS * scale))
+        gen_tables(os.path.join(out, "warm"), warm_seed, REGISTRY_WARM_ROWS)
+        for p in range(REGISTRY_SETS):
+            tables = os.path.join(out, "timed", f"set{p}")
             gen_tables(tables, seed * 16 + p, rows)
-            expected_results(tables, REGISTRY_QUERIES, os.path.join(out, "expected", f"pass{p}"))
+            expected_results(tables, REGISTRY_QUERIES, os.path.join(out, "expected", f"set{p}"))
         manifest = {"family": "registry", "lineitem_rows": rows, "queries": REGISTRY_QUERIES}
     else:
         raise ValueError(f"unknown workload {workload!r}")

@@ -36,9 +36,8 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 from perfbench import checks  # noqa: E402
-from perfbench.gen import REGISTRY_PASSES, REGISTRY_QUERIES  # noqa: E402
+from perfbench.gen import DIAMETER_PORT, REGISTRY_QUERIES, REGISTRY_SETS  # noqa: E402
 
-PROTOCOL = {"diameter_mixed": "diameter", "http_ocs_noisy": "http_ocs"}
 INGEST_LAYERS = (
     "sources.pcap",
     "protocols.net",
@@ -52,8 +51,8 @@ QUERY_MODULES = (
     "relational", "events_ops", "text_ops", "dedup_ops", "vector_ops", "multimodal_ops", "protocol_ops",
 )
 MIN_ITERATIONS = 3
-# A single warm-up ingest leaves the next few timed ingests still speeding up.
-WARM_INGESTS = 4
+WARM_INGESTS = 2  # on the small warm-up input
+LOCAL1_INGESTS = 2  # keeps a traced run under three minutes on 4 cores
 
 
 # ---------------------------------------------------------------- spans
@@ -165,12 +164,12 @@ def release(spark) -> None:
     spark.catalog.clearCache()
 
 
-def ingest(spark, protocol: str, glob: str, out_dir: str) -> None:
-    """capture glob → table + ledger, as the batch CLI does it."""
+def ingest(spark, glob: str, out_dir: str) -> None:
+    """capture glob → Diameter table + ledger, as the batch CLI does it."""
     from ingestor_etl_spark.__main__ import build_pipeline
     from ingestor_etl_spark.sinks.ledger import append_ledger, file_counters, ledger_rows
 
-    df, decoded = build_pipeline(spark, protocol, glob)
+    df, decoded = build_pipeline(spark, "diameter", glob)
     df.write.format("parquet").mode("append").save(os.path.join(out_dir, "table"))
     append_ledger(ledger_rows(file_counters(decoded)), os.path.join(out_dir, "ledger"))
 
@@ -179,13 +178,15 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# ---------------------------------------------------------------- ingest workloads
+# ---------------------------------------------------------------- ingest workload
 class Ingest:
-    def __init__(self, spark, workload: str, data: str, spans: Spans, report: checks.Report) -> None:
+    """``diameter_mixed``: capture glob → Diameter table + ledger."""
+
+    def __init__(self, spark, data: str, spans: Spans, report: checks.Report) -> None:
         self.spark, self.data = spark, data
-        self.protocol = PROTOCOL[workload]
         self.spans, self.report = spans, report
         self.glob = os.path.join(data, "timed", "*.pcap")
+        self.warm_glob = os.path.join(data, "warm", "*.pcap")
         with open(os.path.join(data, "manifest.json")) as fh:
             self.manifest = json.load(fh)
         self.n = 0
@@ -197,143 +198,147 @@ class Ingest:
     def warm_up(self) -> None:
         with self.spans.span("warmup"):
             for _ in range(WARM_INGESTS):
-                ingest(self.spark, self.protocol, os.path.join(self.data, "warm", "*.pcap"),
-                       self.out_dir("warm"))
+                ingest(self.spark, self.warm_glob, self.out_dir("warm"))
                 release(self.spark)
 
-    def loop(self, seconds: float) -> list[float]:
-        """Closed loop of cold ingests, caches released after each."""
+    def cold(self, tag: str = "cold") -> float:
+        """One cold ingest of the timed input, checked; caches released after."""
+        out = self.out_dir(tag)
+        with self.spans.span(f"ingest.{tag}") as sp:
+            ingest(self.spark, self.glob, out)
+        release(self.spark)
+        checks.check_ingest(self.report, self.manifest, out)
+        return sp["seconds"]
+
+    def end_to_end(self, seconds: float) -> dict:
+        """Closed loop of cold ingests for ``seconds`` (at least
+        ``MIN_ITERATIONS``); the median is reported."""
         cold = []
         t_end = time.perf_counter() + seconds
         while len(cold) < MIN_ITERATIONS or time.perf_counter() < t_end:
-            out = self.out_dir("cold")
-            with self.spans.span("ingest.cold") as sp:
-                ingest(self.spark, self.protocol, self.glob, out)
-            cold.append(sp["seconds"])
-            release(self.spark)
-            checks.check_ingest(self.report, self.manifest, out)
-        return cold
-
-    def end_to_end(self, seconds: float) -> dict:
-        cold = self.loop(seconds)
+            cold.append(self.cold())
         ingest_s = statistics.median(cold)
-        return {
-            "cold_s": ingest_s,
-            "throughput": self.manifest["decoded_messages"] / ingest_s,
-            "iterations": len(cold),
-        }
+        return {"cold_s": ingest_s, "throughput": self.manifest["decoded_messages"] / ingest_s,
+                "iterations": len(cold)}
 
     # --------------------------------------------------- traced ladder
     def cuts(self):
         """Cumulative cuts: (layer, run) where run() builds the cut from
-        the public calls and executes it, timing each call's build."""
+        the public calls and executes it, timing each call's build; it
+        returns the builds, the observed counts and the output directory
+        to check (a full ingest's), if any."""
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        from ingestor_etl_spark.__main__ import build_pipeline
         from ingestor_etl_spark.plans.layout import materialize
+        from ingestor_etl_spark.protocols.diameter import correlate_diameter, decode_diameter
         from ingestor_etl_spark.protocols.net import expand_l4
-        from ingestor_etl_spark.sinks.ledger import append_ledger, file_counters, ledger_rows
         from ingestor_etl_spark.sources.pcap import read_pcap
 
         spark, glob, spans = self.spark, self.glob, self.spans
-        if self.protocol == "diameter":
-            from ingestor_etl_spark.protocols.diameter import correlate_diameter, decode_diameter
+        useful = ((F.col("src_port") == DIAMETER_PORT) | (F.col("dst_port") == DIAMETER_PORT)) & (
+            F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
 
-            port = 3868
-            useful = ((F.col("src_port") == port) | (F.col("dst_port") == port)) & (
-                F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
-
-            def decode(frames):
-                # correlate_diameter materializes its input; without that
-                # the decode stage alone runs in far fewer tasks
-                return materialize(decode_diameter(frames))
-
-            correlate = correlate_diameter
-
-            matched = [F.count(F.lit(1)).alias("n"), F.sum(F.col("matched").cast("int")).alias("m")]
-        else:
-            from ingestor_etl_spark.protocols.http_sig import extract_ocs, http_messages, link_http
-
-            useful = (F.col("ip_proto") == 6) & F.col("tcp_flags").isin(16, 24) & (F.length("payload") > 0)
-
-            def decode(frames):
-                return extract_ocs(http_messages(frames))
-
-            def correlate(msgs):
-                return link_http(msgs, enrich_cols=["msisdn", "calling", "called"])
-
-            req = F.col("http_is_request")
-            matched = [F.sum(req.cast("int")).alias("n"),
-                       F.sum((req & F.col("http_response_in").isNotNull()).cast("int")).alias("m")]
+        def decode(frames):
+            # correlate_diameter materializes its input; without that
+            # the decode stage alone runs in far fewer tasks
+            return materialize(decode_diameter(frames))
 
         def build(layer, fn, *args):
             with spans.span(f"build.{layer}") as sp:
                 out = fn(*args)
             return out, sp["seconds"]
 
-        def chain(upto: int):
+        def run_cut(upto: int, observe):
             df, b = build("sources.pcap", read_pcap, spark, glob)
             builds = {"sources.pcap": b}
             steps = [("protocols.net", expand_l4), ("protocols.decode", decode),
-                     ("operators.correlate", correlate)]
+                     ("operators.correlate", correlate_diameter)]
             for layer, fn in steps[: upto - 1]:
                 df, builds[layer] = build(layer, fn, df)
-            return df, builds
-
-        def run_cut(upto: int, observe):
-            from pyspark.sql import Observation
-
-            df, builds = chain(upto)
             obs = Observation(f"cut{upto}")
             noop(df.observe(obs, *observe))
-            return builds, obs.get
+            return builds, obs.get, None
 
         rows = [F.count(F.lit(1)).alias("rows")]
+        matched = [F.count(F.lit(1)).alias("n"), F.sum(F.col("matched").cast("int")).alias("m")]
         yield "sources.pcap", lambda: run_cut(1, rows)
         yield "protocols.net", lambda: run_cut(2, rows + [F.sum(useful.cast("int")).alias("useful")])
         yield "protocols.decode", lambda: run_cut(3, rows)
         yield "operators.correlate", lambda: run_cut(4, rows + matched)
 
         def table_cut(with_ledger: bool):
-            from pyspark.sql import Observation
-
             out = self.out_dir("ladder")
-            obs = Observation("table")
-            with spans.span("build.pipeline"):
-                df, decoded = build_pipeline(spark, self.protocol, glob)
-            with spans.span("build.sinks.table") as sp_w:
-                writer = df.observe(obs, *rows).write.format("parquet").mode("append")
-            builds = {"sinks.table": sp_w["seconds"]}
-            writer.save(os.path.join(out, "table"))
-            if not with_ledger:
-                return builds, obs.get
-            obs_l = Observation("ledger")
-            with spans.span("build.sinks.ledger") as sp_l:
-                ledger = ledger_rows(file_counters(decoded)).observe(obs_l, *rows)
-            builds["sinks.ledger"] = sp_l["seconds"]
-            append_ledger(ledger, os.path.join(out, "ledger"))
-            checks.check_ingest(self.report, self.manifest, out)
-            return builds, obs_l.get
+            builds, observed = self.observed_ingest(out, with_ledger)
+            return builds, observed, out if with_ledger else None
 
         yield "sinks.table", lambda: table_cut(False)
         yield "sinks.ledger", lambda: table_cut(True)
 
+    def observed_ingest(self, out: str, with_ledger: bool = True) -> tuple[dict, dict]:
+        """The batch ingest with the trace's instruments: the rows written
+        to the table (and the ledger) observed, sink builds timed."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        from ingestor_etl_spark.__main__ import build_pipeline
+        from ingestor_etl_spark.sinks.ledger import append_ledger, file_counters, ledger_rows
+
+        rows = [F.count(F.lit(1)).alias("rows")]
+        obs = Observation("table")
+        with self.spans.span("build.pipeline"):
+            df, decoded = build_pipeline(self.spark, "diameter", self.glob)
+        with self.spans.span("build.sinks.table") as sp_w:
+            writer = df.observe(obs, *rows).write.format("parquet").mode("append")
+        builds = {"sinks.table": sp_w["seconds"]}
+        writer.save(os.path.join(out, "table"))
+        if not with_ledger:
+            return builds, obs.get
+        obs_l = Observation("ledger")
+        with self.spans.span("build.sinks.ledger") as sp_l:
+            ledger = ledger_rows(file_counters(decoded)).observe(obs_l, *rows)
+        builds["sinks.ledger"] = sp_l["seconds"]
+        append_ledger(ledger, os.path.join(out, "ledger"))
+        return builds, obs_l.get
+
+    def overhead(self, stores: StatusStores, seconds: float) -> tuple[float, float]:
+        """Interleaved cold ingests, plain and traced (job group, observed
+        rows, status stores read), for ``seconds`` and at least two of
+        each: the two medians."""
+        sc = self.spark.sparkContext
+        plain, traced = [], []
+        t_end = time.perf_counter() + seconds
+        while len(traced) < 2 or time.perf_counter() < t_end:
+            plain.append(self.cold())
+            group = f"{self.spans.run_id}:traced:{len(traced)}"
+            out = self.out_dir("traced")
+            with self.spans.span("ingest.traced") as sp:
+                sc.setJobGroup(group, "traced ingest")
+                self.observed_ingest(out)
+                sc.setJobGroup("perfbench", "untraced")
+                stores.group(group)
+            traced.append(sp["seconds"])
+            release(self.spark)
+            checks.check_ingest(self.report, self.manifest, out)
+        return statistics.median(plain), statistics.median(traced)
+
     def per_layer(self, seconds: float) -> dict:
         stores = StatusStores(self.spark)
         sc = self.spark.sparkContext
-        # Untraced reference for the gap/overhead figures.
-        ingest_s = statistics.median(self.loop(seconds))
+        ingest_s, traced_s = self.overhead(stores, seconds)
         out: dict[str, float] = {}
         prev_time, prev_stats = 0.0, dict.fromkeys(LAYER_STATS, 0.0)
         for layer, run in self.cuts():
             group = f"{self.spans.run_id}:{layer}"
             sc.setJobGroup(group, layer)
             with self.spans.span(f"cut.{layer}") as sp:
-                builds, observed = run()
+                builds, observed, written = run()
             sc.setJobGroup("perfbench", "untraced")
             if layer == "operators.correlate":
                 out["operators.correlate.cache_mb"] = stores.cached_mb()
             release(self.spark)
+            if written:
+                checks.check_ingest(self.report, self.manifest, written)
             stats = stores.group(group)
             t = sp["seconds"]
             out[f"{layer}.exec_s"] = t - prev_time
@@ -347,28 +352,32 @@ class Ingest:
             if layer == "operators.correlate":
                 out["operators.correlate.matched_frac"] = observed["m"] / max(1, observed["n"])
             prev_time, prev_stats = t, stats
-        layer_sum = sum(out[f"{layer}.exec_s"] for layer in INGEST_LAYERS)
-        out["trace.layer_gap_frac"] = abs(layer_sum - ingest_s) / ingest_s
-        out["trace.overhead_frac"] = (prev_time - ingest_s) / ingest_s  # full traced cut
-        out["driver.local1_speedup"] = self.local1(ingest_s)
+        # The exec_s increments add up to the full cut's time.
+        out["trace.layer_gap_frac"] = abs(prev_time - ingest_s) / ingest_s
+        out["trace.overhead_frac"] = (traced_s - ingest_s) / ingest_s
+        out["driver.local1_speedup"] = self.local1() / ingest_s
         return out
 
-    def local1(self, ingest_s: float) -> float:
-        """The same cold ingest on one core ÷ the ``local[nproc]`` median."""
+    def local1(self) -> float:
+        """Mean cold ingest after restarting the session on ``local[1]``
+        (shuffle partitions as a fresh ``local[1]`` process sets them) and
+        warming it up as the ``local[nproc]`` session was."""
         from ingestor_etl_spark.session import get_spark
 
         self.spark.stop()
         os.environ["SPARK_GRAFT_CPUS"] = "1"
-        self.spark = get_spark("perfbench-local1", **SESSION_OVERRIDES)
-        with self.spans.span("ingest.cold.local1") as sp:
-            ingest(self.spark, self.protocol, self.glob, self.out_dir("local1"))
-        release(self.spark)
-        return sp["seconds"] / ingest_s
+        self.spark = get_spark("perfbench-local1", **SESSION_OVERRIDES,
+                               **{"spark.sql.shuffle.partitions": "1"})
+        with self.spans.span("local1"):
+            self.warm_up()
+            return statistics.fmean(self.cold("local1") for _ in range(LOCAL1_INGESTS))
 
 
 # ---------------------------------------------------------------- registry workload
 class Registry:
-    def __init__(self, spark, workload: str, data: str, spans: Spans, report: checks.Report) -> None:
+    """``registry_cold``: one query per registry module, cold."""
+
+    def __init__(self, spark, data: str, spans: Spans, report: checks.Report) -> None:
         from ingestor_etl_spark.queries import load_all
 
         self.spark, self.data, self.spans, self.report = spark, data, spans, report
@@ -393,18 +402,18 @@ class Registry:
                 release(self.spark)
 
     def pass_(self, p: int, traced: bool) -> dict[str, dict]:
-        """One cold pass over the tables of pass ``p`` in fixed order,
-        caches released between queries: build, then the first execution
+        """One cold pass over table set ``p`` in fixed order, caches
+        released between queries: build, then the first execution
         writing the result as parquet (as ``python -m ingestor_etl_spark
         --query NAME --out DIR`` does). A traced pass also times a second
         execution."""
-        self._tmp(f"pass{p}")
-        sf_dir = os.path.join(self.data, "timed", f"pass{p}")
+        self._tmp(f"set{p}")
+        sf_dir = os.path.join(self.data, "timed", f"set{p}")
         sc = self.spark.sparkContext
         res = {}
         for name in self.names:
             q = self.registry[name]
-            out = os.path.join(self.data, "out", f"pass{p}", name)
+            out = os.path.join(self.data, "out", f"set{p}", name)
             if traced:
                 sc.setJobGroup(f"{self.spans.run_id}:q:{name}", name)
             with self.spans.span(f"query.{name}.build") as b:
@@ -421,16 +430,22 @@ class Registry:
                 sc.setJobGroup("perfbench", "untraced")
             release(self.spark)
             checks.check_query(self.report, name, pq.read_table(out).to_pandas(),
-                               os.path.join(self.data, "expected", f"pass{p}", f"{name}.parquet"))
+                               os.path.join(self.data, "expected", f"set{p}", f"{name}.parquet"))
         return res
 
     def end_to_end(self, seconds: float) -> dict:
-        colds = []
-        for p in range(REGISTRY_PASSES):
-            res = self.pass_(p, traced=False)
-            colds.append(sum(r["build_s"] + r["first_s"] for r in res.values()))
-        cold = statistics.median(colds)
-        return {"cold_s": cold, "throughput": len(self.names) / cold, "iterations": len(colds)}
+        """Cold passes, each over its own table set, for ``seconds`` (at
+        least ``MIN_ITERATIONS``, at most one per set): the sum over the
+        queries of each query's median build + first execution."""
+        per_query = defaultdict(list)
+        t_end = time.perf_counter() + seconds
+        p = 0
+        while p < REGISTRY_SETS and (p < MIN_ITERATIONS or time.perf_counter() < t_end):
+            for name, r in self.pass_(p, traced=False).items():
+                per_query[name].append(r["build_s"] + r["first_s"])
+            p += 1
+        cold = sum(statistics.median(v) for v in per_query.values())
+        return {"cold_s": cold, "throughput": len(self.names) / cold, "iterations": p}
 
     def per_layer(self, seconds: float) -> dict:
         stores = StatusStores(self.spark)
@@ -479,8 +494,8 @@ def main(argv: list[str] | None = None) -> int:
     with spans.span("session"):
         spark = get_spark(f"perfbench-{args.workload}", **SESSION_OVERRIDES)
     master = spark.sparkContext.master
-    kind = Ingest if args.workload in PROTOCOL else Registry
-    w = kind(spark, args.workload, args.data, spans, report)
+    kind = {"diameter_mixed": Ingest, "registry_cold": Registry}[args.workload]
+    w = kind(spark, args.data, spans, report)
     w.warm_up()
     setup_s = time.time() - args.spawn_time
     if args.trace:

@@ -40,7 +40,7 @@ def _digests(d: str) -> dict[str, str]:
     return out
 
 
-@pytest.mark.parametrize("workload", ["diameter_mixed", "http_ocs_noisy", "registry_cold"])
+@pytest.mark.parametrize("workload", ["diameter_mixed", "registry_cold"])
 def test_same_seed_same_bytes(tmp_path, workload):
     generate(workload, 5, str(tmp_path / "a"), SMALL)
     generate(workload, 5, str(tmp_path / "b"), SMALL)
@@ -56,11 +56,11 @@ def test_same_seed_same_bytes(tmp_path, workload):
 
 
 def _walk(path: str):
-    """Independent decode: (frames, per-direction Diameter messages,
+    """Independent decode: (frames, frames without Diameter, messages,
     SCTP (sid, ssn) per direction)."""
     with open(path, "rb") as fh:
         data = fh.read()
-    n_frames = 0
+    n_frames = n_noise = 0
     streams: dict[tuple, bytearray] = defaultdict(bytearray)
     msgs, ssns = [], defaultdict(list)
     for _, _, dlt, _, pkt in iter_frames(data):
@@ -68,6 +68,7 @@ def _walk(path: str):
         dgram = strip_link(dlt, pkt)
         ip = parse_ipv4(dgram) if dgram else None
         if ip is None:
+            n_noise += 1
             continue
         src, dst, proto, *_, l4 = ip
         if proto == 132:
@@ -80,6 +81,10 @@ def _walk(path: str):
             sport, dport = struct.unpack("!HH", l4[:4])
             if 3868 in (sport, dport):
                 streams[(src, sport, dst, dport)] += l4[(l4[12] >> 4) * 4:]
+            else:
+                n_noise += 1
+        else:
+            n_noise += 1
     for buf in streams.values():
         pos = 0
         while pos < len(buf):
@@ -87,7 +92,7 @@ def _walk(path: str):
             assert used > 0, "TCP stream ends on a message boundary"
             msgs.append(msg)
             pos += used
-    return n_frames, msgs, ssns
+    return n_frames, n_noise, msgs, ssns
 
 
 def test_diameter_manifest_matches_captures(tmp_path):
@@ -97,9 +102,10 @@ def test_diameter_manifest_matches_captures(tmp_path):
     assert m["decoded_messages"] == sum(f["messages"] for f in m["files"])
     biggest = max(f["frames"] for f in m["files"])
     assert biggest > m["frames"] / 5  # one file carries a large share
-    unique = set()
+    unique, noise = set(), 0
     for f in m["files"]:
-        n_frames, msgs, ssns = _walk(str(tmp_path / "timed" / f["name"]))
+        n_frames, n_noise, msgs, ssns = _walk(str(tmp_path / "timed" / f["name"]))
+        noise += n_noise
         kinds = Counter(msg["command_code"] == 280 for msg in msgs)
         assert n_frames == f["frames"]
         assert kinds[False] == f["messages"]
@@ -109,25 +115,10 @@ def test_diameter_manifest_matches_captures(tmp_path):
         unique |= {(x["hop_by_hop_id"], x["end_to_end_id"]) for x in msgs
                    if x["request"] and x["command_code"] != 280}
     assert len(unique) == m["table_rows"]
-
-
-def test_http_manifest_matches_captures(tmp_path):
-    m = generate("http_ocs_noisy", 12, str(tmp_path), SMALL)
-    assert m["table_rows"] == 2 * m["matched"] + m["request_only"]
-    assert m["decoded_messages"] == m["table_rows"]
-    sizes = {f["frames"] for f in m["files"]}
-    assert max(sizes) - min(sizes) <= max(sizes) // 5  # equal-sized files
-    signalling = 0
-    for f in m["files"]:
-        with open(tmp_path / "timed" / f["name"], "rb") as fh:
-            frames = list(iter_frames(fh.read()))
-        assert len(frames) == f["frames"]
-        for _, _, dlt, _, pkt in frames:
-            dgram = strip_link(dlt, pkt)
-            ip = parse_ipv4(dgram) if dgram else None
-            if ip and ip[2] == 6 and 8080 in struct.unpack("!HH", ip[6][:4]) and len(ip[6]) > 20:
-                signalling += 1
-    assert 0.75 <= 1 - signalling / m["frames"] <= 0.85
+    assert 0.05 <= noise / m["frames"] <= 0.15
+    # the warm-up input is small and has the timed input's layout
+    warm = sorted(os.listdir(tmp_path / "warm"))
+    assert warm == sorted(f["name"] for f in m["files"])
 
 
 def test_refuses_without_checkout(tmp_path):
@@ -143,7 +134,7 @@ def test_refuses_without_checkout(tmp_path):
 
 
 @pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize("workload", ["diameter_mixed", "http_ocs_noisy", "registry_cold"])
+@pytest.mark.parametrize("workload", ["diameter_mixed", "registry_cold"])
 def test_smoke_emits_every_metric(workload, trace):
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
