@@ -17,13 +17,16 @@ Spark shape:
 
 The byte walk is a plain-Python parser (unit-testable); everything
 relational is DataFrame-native so Catalyst handles pruning/pushdown
-and AQE picks the physical join.
+and AQE picks the physical join. Streaming
+(``streaming.pipeline.stream_decode_diameter``) runs the same segment
+filter, stream key and ``stitch`` walk, carrying each stream's
+pending bytes across micro-batches in keyed state.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -146,19 +149,24 @@ def parse_message(buf: bytes) -> tuple[dict | None, int]:
     return msg, length
 
 
-def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """R1/R2 in batch: replay one stream's segments in frame order
-    with the reference's stash-and-retry semantics; emit one row per
-    complete message."""
-    pdf = pdf.sort_values("frame_no")
-    file = pdf["file"].iloc[0]
-    src, dst = pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0]
-    pending = b""
-    pending_frames: list[int] = []
+def stitch(
+    file: str,
+    src: str,
+    dst: str,
+    segments: Iterable[tuple[int, int, bytes]],
+    pending: bytes = b"",
+    pending_frames: Sequence[int] = (),
+) -> tuple[list[tuple], bytes, list[int]]:
+    """R1/R2: replay one stream's ``(frame_no, ts_us, payload)``
+    segments, in the order given, with the reference's
+    stash-and-retry semantics. Returns one MESSAGE_SCHEMA row per
+    complete message (watchdogs included) plus the bytes and frames
+    still pending, which a later call continues from: batch walks a
+    whole stream at once, streaming carries them in keyed state."""
     rows: list[tuple] = []
-    for frame_no, ts_us, payload in zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]):
+    for frame_no, ts_us, payload in segments:
         buf = pending + bytes(payload)
-        frames = pending_frames + [int(frame_no)]
+        frames = [*pending_frames, int(frame_no)]
         pos = 0
         while pos < len(buf):
             msg, consumed = parse_message(buf[pos:])
@@ -173,29 +181,48 @@ def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
             pos += consumed
         pending = buf[pos:]
         pending_frames = frames if pending else []
+    return rows, pending, pending_frames
+
+
+def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """R1/R2 in batch: one whole stream, walked in frame order."""
+    pdf = pdf.sort_values("frame_no")
+    rows, _, _ = stitch(
+        pdf["file"].iloc[0], pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0],
+        zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]),
+    )
     return pd.DataFrame(rows, columns=_COLS)
 
 
-def decode_diameter(segments: DataFrame) -> DataFrame:
-    """Port-filtered segments → one row per Diameter message.
+# The stream key mirrors the reference's reassembly dict keys: SCTP
+# (sid, ssn, src, dst) — diameter.py:52-71 — and the TCP flow 4-tuple
+# — diameter.py:74-96 — refined by file so captures never cross-talk.
+STREAM_KEY = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
 
-    The stream key mirrors the reference's reassembly dict keys:
-    SCTP (sid, ssn, src, dst) — diameter.py:52-71 — and the TCP
-    flow 4-tuple — diameter.py:74-96 — refined by file so captures
-    never cross-talk. Device-Watchdog (cmd 280) is dropped natively
-    after decode (diameter.py:128-130)."""
-    flows = segments.where(
-        (F.col("src_port") == DIAMETER_PORT) | (F.col("dst_port") == DIAMETER_PORT)
-    ).where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
-    key = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
-    msgs = flows.select(*key, "frame_no", "ts_us", "payload").groupBy(*key).applyInPandas(
-        lambda pdf: _stitch_group(pdf), MESSAGE_SCHEMA
-    )
+
+def diameter_streams(segments: DataFrame) -> DataFrame:
+    """Port-3868 SCTP chunks and TCP data/ACK segments, projected to
+    the stream key plus the columns the stitch walk reads."""
     return (
-        msgs.where(F.col("command_code") != CMD_DEVICE_WATCHDOG)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-        .drop("ts_us")
+        segments.where((F.col("src_port") == DIAMETER_PORT) | (F.col("dst_port") == DIAMETER_PORT))
+        .where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
+        .select(*STREAM_KEY, "frame_no", "ts_us", "payload")
     )
+
+
+def drop_watchdogs(messages: DataFrame) -> DataFrame:
+    """Device-Watchdog (cmd 280) is dropped natively after decode
+    (diameter.py:128-130)."""
+    return messages.where(F.col("command_code") != CMD_DEVICE_WATCHDOG)
+
+
+def decode_diameter(segments: DataFrame) -> DataFrame:
+    """Port-filtered segments → one row per Diameter message, one
+    ``applyInPandas`` stitch group per stream key."""
+    msgs = diameter_streams(segments).groupBy(*STREAM_KEY).applyInPandas(
+        _stitch_group, MESSAGE_SCHEMA
+    )
+    return drop_watchdogs(msgs).withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 
 TXN_KEY = ["command_code", "hop_by_hop_id", "end_to_end_id", "session_id"]

@@ -28,8 +28,8 @@ from __future__ import annotations
 import struct
 from binascii import hexlify
 from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ingestor_etl_spark.protocols.rows import map_rows
 from ingestor_etl_spark.sources.pcap import DLT_MTP3
 
 M3UA_PPID = 3
@@ -183,6 +184,8 @@ def parse_m3ua(chunk: bytes) -> tuple[int, int, bytes] | None:
         if plen < 4:
             break
         if tag == 528:
+            if pos + 12 > len(chunk):
+                return None  # truncated protocol data: no OPC/DPC
             opc, dpc = struct.unpack("!2I", chunk[pos + 4 : pos + 12])
             return opc, dpc, chunk[pos + 16 : pos + plen]
         pos += plen + ((-plen) % 4)
@@ -457,69 +460,37 @@ GSM_MAP_SCHEMA = StructType(
 _OUT_COLS = [f.name for f in GSM_MAP_SCHEMA.fields]
 
 
+_SCCP_FIELDS = ("tcap", "seg_first", "seg_remaining", "seg_ref",
+                "cd_ssn", "cd_digits", "cg_ssn", "cg_digits")
+
+
+def _sccp_row(parse_mtp, file, frame_no, ts_us, sip, dip, payload):
+    """One M3UA chunk (``parse_m3ua``) or raw MTP3 frame
+    (``parse_mtp3``) → its SCCP-level row."""
+    mtp = parse_mtp(bytes(payload))
+    if mtp is None:
+        return
+    opc, dpc, sccp = mtp
+    info = parse_sccp(sccp)
+    if info is not None:
+        yield (file, frame_no, ts_us, sip, dip, opc, dpc) + tuple(info[k] for k in _SCCP_FIELDS)
+
+
 def _sccp_rows(segments: DataFrame, frames: DataFrame | None) -> DataFrame:
     """Stage 1: M3UA chunks (P7/P8) + optional raw-MTP3 frames (P9)
     → SCCP-level rows."""
-
-    def gen_m3ua(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frame_no, ts_us, sip, dip, payload in zip(
-                pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["payload"],
-            ):
-                try:
-                    m3ua = parse_m3ua(bytes(payload))
-                    if m3ua is None:
-                        continue
-                    opc, dpc, sccp = m3ua
-                    info = parse_sccp(sccp)
-                    if info is None:
-                        continue
-                    rows.append(
-                        (file, frame_no, ts_us, sip, dip, opc, dpc, info["tcap"],
-                         info["seg_first"], info["seg_remaining"], info["seg_ref"],
-                         info["cd_ssn"], info["cd_digits"],
-                         info["cg_ssn"], info["cg_digits"])
-                    )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=[f.name for f in _SCCP_SCHEMA.fields])
-
     m3ua_src = segments.where(
         (F.col("ip_proto") == 132) & (F.col("sctp_ppid") == M3UA_PPID)
-    ).select("file", "frame_no", "ts_us", "src_ip", "dst_ip", "payload")
-    out = m3ua_src.mapInPandas(gen_m3ua, _SCCP_SCHEMA)
+    )
+    cols = ["file", "frame_no", "ts_us", "src_ip", "dst_ip", "payload"]
+    out = map_rows(m3ua_src, cols, partial(_sccp_row, parse_m3ua), _SCCP_SCHEMA)
 
     if frames is not None:
-        def gen_mtp3(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for file, frame_no, ts_us, pkt in zip(
-                    pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["payload"]
-                ):
-                    try:
-                        mtp3 = parse_mtp3(bytes(pkt))
-                        if mtp3 is None:
-                            continue
-                        opc, dpc, sccp = mtp3
-                        info = parse_sccp(sccp)
-                        if info is None:
-                            continue
-                        rows.append(
-                            (file, frame_no, ts_us, None, None, opc, dpc, info["tcap"],
-                             info["seg_first"], info["seg_remaining"], info["seg_ref"],
-                             info["cd_ssn"], info["cd_digits"],
-                             info["cg_ssn"], info["cg_digits"])
-                        )
-                    except Exception:
-                        continue
-                yield pd.DataFrame(rows, columns=[f.name for f in _SCCP_SCHEMA.fields])
-
-        raw = frames.where((F.col("dlt") == DLT_MTP3) & F.col("error").isNull()).select(
-            "file", "frame_no", F.unix_micros("ts").alias("ts_us"), "payload"
-        )
-        out = out.unionByName(raw.mapInPandas(gen_mtp3, _SCCP_SCHEMA))
+        raw = frames.where((F.col("dlt") == DLT_MTP3) & F.col("error").isNull())
+        no_ip = F.lit(None).cast("string")
+        cols = ["file", "frame_no", F.unix_micros("ts").alias("ts_us"),
+                no_ip.alias("src_ip"), no_ip.alias("dst_ip"), "payload"]
+        out = out.unionByName(map_rows(raw, cols, partial(_sccp_row, parse_mtp3), _SCCP_SCHEMA))
     return out
 
 
@@ -562,29 +533,18 @@ def _reassemble_xudt(sccp_rows: DataFrame) -> DataFrame:
     return unsegmented.select(*merged.columns).unionByName(merged)
 
 
+def _tcap_row(file, frames_list, ts_us, sip, dip, opc, dpc, tcap):
+    fields = parse_tcap(bytes(tcap))
+    if fields is not None:
+        yield (file, list(frames_list), ts_us, sip, dip, opc, dpc) + tuple(
+            fields.get(c) for c in _OUT_COLS[7:]
+        )
+
+
 def decode_gsm_map(segments: DataFrame, frames: DataFrame | None = None) -> DataFrame:
     """Full pipeline: M3UA/MTP3 → SCCP → R3 → TCAP fields. Pass the
     raw frames DataFrame too when the capture may be DLT 141."""
     sccp = _reassemble_xudt(_sccp_rows(segments, frames))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frames_list, ts_us, sip, dip, opc, dpc, tcap in zip(
-                pdf["file"], pdf["frames_list"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["mtp3_opc"], pdf["mtp3_dpc"], pdf["tcap_bytes"],
-            ):
-                try:
-                    fields = parse_tcap(bytes(tcap))
-                except Exception:
-                    fields = None
-                if fields is None:
-                    continue
-                rows.append(
-                    (file, list(frames_list), ts_us, sip, dip, opc, dpc)
-                    + tuple(fields.get(c) for c in _OUT_COLS[7:])
-                )
-            yield pd.DataFrame(rows, columns=_OUT_COLS)
-
-    out = sccp.mapInPandas(gen, GSM_MAP_SCHEMA)
+    cols = ["file", "frames_list", "ts_us", "src_ip", "dst_ip", "mtp3_opc", "mtp3_dpc", "tcap_bytes"]
+    out = map_rows(sccp, cols, _tcap_row, GSM_MAP_SCHEMA)
     return out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")

@@ -22,7 +22,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -32,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ingestor_etl_spark.protocols.rows import map_rows
 
 GTPC_V1_PORT = 2123
 
@@ -182,34 +183,20 @@ def parse_gtp(payload: bytes) -> dict | None:
     return None
 
 
+def _gtp_row(file, frame_no, ts_us, src, dst, payload):
+    msg = parse_gtp(bytes(payload))
+    if msg is not None:
+        yield (file, frame_no, ts_us, src, dst) + tuple(msg.get(c) for c in _COLS[5:])
+
+
 def decode_gtp(segments: DataFrame) -> DataFrame:
     """UDP port-2123 segments → one row per GTP-C message."""
     flows = segments.where(
         (F.col("ip_proto") == 17)
         & ((F.col("src_port") == GTPC_V1_PORT) | (F.col("dst_port") == GTPC_V1_PORT))
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frame_no, ts_us, src, dst, payload in zip(
-                pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["src_ip"],
-                pdf["dst_ip"], pdf["payload"],
-            ):
-                try:
-                    msg = parse_gtp(bytes(payload))
-                except Exception:
-                    msg = None
-                if msg is not None:
-                    rows.append(
-                        (file, frame_no, ts_us, src, dst)
-                        + tuple(msg.get(c) for c in _COLS[5:])
-                    )
-            yield pd.DataFrame(rows, columns=_COLS)
-
-    out = flows.select(
-        "file", "frame_no", "ts_us", "src_ip", "dst_ip", "payload"
-    ).mapInPandas(gen, GTP_SCHEMA)
+    cols = ["file", "frame_no", "ts_us", "src_ip", "dst_ip", "payload"]
+    out = map_rows(flows, cols, _gtp_row, GTP_SCHEMA)
     return out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 

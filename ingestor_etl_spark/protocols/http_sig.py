@@ -37,7 +37,6 @@ UDF-style mapInPandas extractors — one per dialect.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -51,6 +50,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ingestor_etl_spark.protocols.rows import map_rows
 
 try:
     import xmltodict
@@ -461,37 +462,27 @@ def parse_generic_body(body: str | None, state: str | None, dialect: str) -> dic
 
 
 def _extract(messages: DataFrame, schema: StructType, fn) -> DataFrame:
-    """Attach dialect fields to each message row via mapInPandas."""
-    in_cols = messages.columns
-    out_schema = StructType(
-        [f for f in messages.schema.fields if f.name != "body"] + list(schema.fields)
-    )
+    """Attach dialect fields to each message row; ``body`` is replaced
+    by ``schema``'s fields. Rows whose body parses to nothing are
+    dropped like the reference's ``return None`` paths."""
+    keep = [f for f in messages.schema.fields if f.name != "body"]
+    clen_at = [f.name for f in keep].index("http_content_length")
     extra = [f.name for f in schema.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = []
-            for body, clen in zip(pdf["body"], pdf["http_content_length"]):
-                if pd.isna(clen):
-                    state = "noContent"  # http_ocs_ingestor.py:304-307
-                elif not body:
-                    state = "httpIncomplete"  # :310-313
-                else:
-                    state = None
-                try:
-                    parsed.append(fn(body, state))
-                except Exception:
-                    parsed.append({})
-            keep = pdf.drop(columns=["body"])
-            for name in extra:
-                keep[name] = [p.get(name) for p in parsed]
-            # rows whose body parsed to nothing are dropped like the
-            # reference's `return None` paths
-            mask = [bool(p) for p in parsed]
-            yield keep[pd.Series(mask, index=keep.index)]
+    def row(*values):
+        *kept, body = values
+        if pd.isna(kept[clen_at]):
+            state = "noContent"  # http_ocs_ingestor.py:304-307
+        elif not body:
+            state = "httpIncomplete"  # :310-313
+        else:
+            state = None
+        parsed = fn(body, state)
+        if parsed:
+            yield (*kept, *(parsed.get(name) for name in extra))
 
-    assert "body" in in_cols
-    return messages.mapInPandas(gen, out_schema)
+    cols = [f.name for f in keep] + ["body"]
+    return map_rows(messages, cols, row, StructType(keep + list(schema.fields)))
 
 
 def extract_ocs(messages: DataFrame) -> DataFrame:

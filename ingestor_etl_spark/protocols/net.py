@@ -23,7 +23,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import timestamp_micros, unix_micros
 from pyspark.sql.types import (
@@ -35,6 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ingestor_etl_spark.protocols.rows import map_rows
 from ingestor_etl_spark.sources.pcap import (
     DLT_EN10MB,
     DLT_ENC,
@@ -70,7 +70,6 @@ SEGMENT_SCHEMA = StructType(
         StructField("payload", BinaryType()),
     ]
 )
-_COLS = [f.name for f in SEGMENT_SCHEMA.fields]
 
 
 def strip_link(dlt: int, pkt: bytes) -> bytes | None:
@@ -143,7 +142,7 @@ def iter_sctp_data_chunks(seg: bytes) -> Iterator[tuple[int, int, int, int, byte
 
 
 def _expand_one(file: str, frame_no: int, ts_us: int, dlt: int, pkt: bytes):
-    datagram = strip_link(dlt, pkt)
+    datagram = strip_link(dlt, bytes(pkt))
     if datagram is None:
         return
     parsed = parse_ipv4(datagram)
@@ -171,21 +170,7 @@ def expand_l4(frames: DataFrame) -> DataFrame:
     """frames (from sources.pcap.read_pcap) → one row per TCP/UDP
     segment or SCTP DATA chunk, with ``ts`` re-attached as
     TIMESTAMP."""
-    src = frames.select(
-        "file", "frame_no", unix_micros("ts").alias("ts_us"), "dlt", "payload"
-    ).where("error IS NULL" if "error" in frames.columns else "true")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file, frame_no, ts_us, dlt, pkt in zip(
-                pdf["file"], pdf["frame_no"], pdf["ts_us"], pdf["dlt"], pdf["payload"]
-            ):
-                try:
-                    rows.extend(_expand_one(file, frame_no, ts_us, dlt, bytes(pkt)))
-                except Exception:
-                    continue  # malformed frame: drop, §2.8
-            yield pd.DataFrame(rows, columns=_COLS)
-
-    out = src.mapInPandas(gen, SEGMENT_SCHEMA)
+    src = frames.where("error IS NULL" if "error" in frames.columns else "true")
+    cols = ["file", "frame_no", unix_micros("ts").alias("ts_us"), "dlt", "payload"]
+    out = map_rows(src, cols, _expand_one, SEGMENT_SCHEMA)
     return out.withColumn("ts", timestamp_micros("ts_us"))

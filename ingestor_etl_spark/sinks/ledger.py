@@ -11,12 +11,16 @@ table, written append-only — each state transition is a new row and
 the current state is the latest row per file (last-writer-wins by
 ``updated_datetime``), which is idempotent under retries and needs
 no UPDATE support from the store. A1's processed/not_processed
-counters are computed from the decode output's error column —
-PERMISSIVE-style error isolation (§2.8) instead of per-row
-try/except."""
+counters are computed from the decode output's ``error`` column.
+Only the frames source writes that column (one error row per
+malformed container); the decoders drop malformed rows in
+``protocols.rows.map_rows`` without a trace, so ``not_processed`` is
+0 for decoded output until ROADMAP item 2 turns those drops into
+counted dispositions."""
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +34,10 @@ STATE_PENDING = "pending"
 STATE_PROCESSING = "processing"
 STATE_DONE = "processed"
 STATE_ERROR = "error"
+
+# Reading a ledger that does not exist yet: no directory, or a
+# directory with no parquet files in it.
+_NO_LEDGER_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def file_counters(decoded: DataFrame, error_col: str = "error") -> DataFrame:
@@ -85,15 +93,18 @@ def current_ledger_state(spark: SparkSession, path: str) -> DataFrame:
 def pending_files(spark: SparkSession, path: str, available: list[str]) -> list[str]:
     """Work-queue semantics: which of ``available`` capture files
     have no successful ledger entry yet (the reference's fleet
-    coordination via queue state, models.py:255-258)."""
+    coordination via queue state, models.py:255-258). A ledger
+    that does not exist yet means every file is pending; any other
+    read failure (e.g. a corrupt part file) raises, since treating it
+    as empty would re-ingest and duplicate every file."""
     try:
-        done = {
-            r.filename
-            for r in current_ledger_state(spark, path)
-            .where(F.col("state") == STATE_DONE)
-            .select("filename")
-            .collect()
-        }
-    except Exception:  # ledger not created yet
-        done = set()
+        state = current_ledger_state(spark, path)
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NO_LEDGER_YET:
+            raise
+        return list(available)
+    done = {
+        r.filename
+        for r in state.where(F.col("state") == STATE_DONE).select("filename").collect()
+    }
     return [f for f in available if f not in done]

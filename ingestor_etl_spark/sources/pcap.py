@@ -167,14 +167,9 @@ def parse_file_rows(fname: str, content: bytes) -> list[tuple]:
     return rows
 
 
-def read_pcap(spark: SparkSession, path: str) -> DataFrame:
-    """Capture files → frames DataFrame.
-
-    Columns: ``file, frame_no, ts (TIMESTAMP), dlt, orig_len,
-    payload (BINARY), error``. A file that fails the magic sniff
-    produces one error row instead of failing the job (§2.8
-    error-row semantics)."""
-    files = spark.read.format("binaryFile").load(path)
+def parse_captures(files: DataFrame) -> DataFrame:
+    """``binaryFile`` rows (batch or streaming) → frames DataFrame,
+    one ``parse_file_rows`` call per capture file."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -184,3 +179,13 @@ def read_pcap(spark: SparkSession, path: str) -> DataFrame:
 
     frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
     return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+
+
+def read_pcap(spark: SparkSession, path: str) -> DataFrame:
+    """Capture files → frames DataFrame.
+
+    Columns: ``file, frame_no, ts (TIMESTAMP), dlt, orig_len,
+    payload (BINARY), error``. A file that fails the magic sniff
+    produces one error row instead of failing the job (§2.8
+    error-row semantics)."""
+    return parse_captures(spark.read.format("binaryFile").load(path))

@@ -44,36 +44,28 @@ from pyspark.sql.types import (
 
 from ingestor_etl_spark.protocols.diameter import (
     MESSAGE_SCHEMA,
-    parse_message,
+    STREAM_KEY,
+    diameter_streams,
+    drop_watchdogs,
+    stitch,
 )
-from ingestor_etl_spark.sources.pcap import FRAME_SCHEMA, iter_frames
+from ingestor_etl_spark.sources.pcap import parse_captures
 
 _COLS = [f.name for f in MESSAGE_SCHEMA.fields]
+_MAX_FILES_PER_TRIGGER = 16  # capture files per micro-batch
 
 
-def stream_frames(spark: SparkSession, path: str, max_files_per_trigger: int = 16) -> DataFrame:
+def stream_frames(spark: SparkSession, path: str) -> DataFrame:
     """S2/S3 as a stream: new capture files appearing under ``path``
-    become frame rows. One file = one task, same as batch."""
+    become frame rows through the batch parse (``read_pcap``'s
+    ``parse_captures``). One file = one task, same as batch."""
     files = (
         spark.readStream.format("binaryFile")
         .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", str(_MAX_FILES_PER_TRIGGER))
         .load(path)
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                rows: list[tuple] = []
-                try:
-                    for frame_no, ts_us, dlt, orig_len, payload in iter_frames(bytes(content)):
-                        rows.append((fname, frame_no, ts_us, dlt, orig_len, payload, None))
-                except Exception as exc:
-                    rows.append((fname, None, None, None, None, None, str(exc)))
-                yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    frames = files.select("path", "content").mapInPandas(parse, FRAME_SCHEMA)
-    return frames.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+    return parse_captures(files)
 
 
 _STITCH_STATE = StructType(
@@ -84,71 +76,49 @@ _STITCH_STATE = StructType(
 )
 
 
-def stream_decode_diameter(
-    segments: DataFrame, timeout_ms: int = 60_000, port: int = 3868
-) -> DataFrame:
-    """R1/R2 as keyed streaming state: per stream key, segments are
-    stitched with the same stash-and-retry walk as the batch path;
-    a processing-time timeout discards stale partial buffers (the
+def stream_decode_diameter(segments: DataFrame, timeout_ms: int = 60_000) -> DataFrame:
+    """R1/R2 as keyed streaming state: the batch port/flag filter,
+    stream key and stitch walk, with each key's pending bytes/frames
+    carried across micro-batches in the state store; a
+    processing-time timeout discards stale partial buffers (the
     reference's implicit EOF flush)."""
-    flows = segments.where(
-        (F.col("src_port") == port) | (F.col("dst_port") == port)
-    ).where(F.col("tcp_flags").isNull() | F.col("tcp_flags").isin(16, 24))
-    key_cols = ["file", "src_ip", "dst_ip", "src_port", "dst_port", "sctp_sid", "sctp_ssn"]
 
-    def stitch(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def stitch_with_state(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             state.remove()
             return
         pending, frames_csv = state.get if state.exists else (b"", "")
         pending = bytes(pending or b"")
         frames = [int(x) for x in frames_csv.split(",") if x]
-        file, src, dst = key[0], key[1], key[2]
         rows: list[tuple] = []
         # applyInPandasWithState may deliver one key's rows as several
-        # Arrow batches; concatenate and sort ONCE so reassembly sees a
-        # globally frame-ordered stream (matches the batch _stitch_group).
+        # Arrow batches; concatenate and sort ONCE so the walk sees a
+        # frame-ordered stream, as in batch.
         chunks = list(pdfs)
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values("frame_no")
-            for frame_no, ts_us, payload in zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]):
-                buf = pending + bytes(payload)
-                fl = frames + [int(frame_no)]
-                pos = 0
-                while pos < len(buf):
-                    msg, consumed = parse_message(buf[pos:])
-                    if consumed == -1:
-                        break
-                    if msg is not None:
-                        # reset frames for EVERY parsed message (matching
-                        # _stitch_group) — a skipped Device-Watchdog must
-                        # not leak its frames into the next message.
-                        if msg.get("command_code") != 280:
-                            rows.append(
-                                (file, fl, int(ts_us), src, dst)
-                                + tuple(msg.get(c) for c in _COLS[5:])
-                            )
-                        fl = [int(frame_no)]
-                    pos += consumed
-                pending = buf[pos:]
-                frames = fl if pending else []
+            rows, pending, frames = stitch(
+                key[0], key[1], key[2],
+                zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]),
+                pending, frames,
+            )
         state.update((pending, ",".join(str(f) for f in frames)))
         state.setTimeoutDuration(timeout_ms)
         if rows:
             yield pd.DataFrame(rows, columns=_COLS)
 
     out = (
-        flows.select(*key_cols, "frame_no", "ts_us", "payload")
-        .groupBy(*key_cols)
+        diameter_streams(segments)
+        .groupBy(*STREAM_KEY)
         .applyInPandasWithState(
-            stitch,
+            stitch_with_state,
             MESSAGE_SCHEMA,
             _STITCH_STATE,
             "append",
             GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
-    return out.withColumn("ts", F.timestamp_micros("ts_us"))
+    return drop_watchdogs(out).withColumn("ts", F.timestamp_micros("ts_us"))
 
 
 _PAIR_SCHEMA = StructType(

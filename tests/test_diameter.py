@@ -8,6 +8,7 @@ from ingestor_etl_spark.protocols.diameter import (
     correlate_diameter,
     decode_diameter,
     parse_message,
+    stitch,
 )
 from ingestor_etl_spark.protocols.net import expand_l4
 from ingestor_etl_spark.sources.pcap import read_pcap
@@ -85,6 +86,30 @@ def test_parse_incomplete_signals_reassembly():
     buf = _ccr()[: len(_ccr()) // 2]
     msg, consumed = parse_message(buf)
     assert msg is None and consumed == -1
+
+
+def test_stitch_same_rows_whole_or_across_micro_batches():
+    """The one stitch walk batch and streaming share: a message split
+    across segments, then two messages coalesced in one segment with
+    a DWR between them. Fed whole, and split into two micro-batches at
+    every cut with the pending bytes/frames carried over, it gives the
+    same rows and frames_list."""
+    ccr, cca = _ccr(), _cca()
+    dwr = g.diameter_msg(280, True, 5, 5, [g.diameter_avp(264, b"peer")])
+    other = g.diameter_msg(272, True, 7, 7, [g.diameter_avp(263, b"s2")])
+    segs = [(1, 100, ccr[:30]), (2, 101, ccr[30:]), (3, 102, other + dwr + cca)]
+
+    whole, pending, frames = stitch("f", "a", "b", segs)
+    assert (pending, frames) == (b"", [])
+    assert [(r[5], r[6], r[1]) for r in whole] == [
+        (True, 272, [1, 2]), (True, 272, [3]), (True, 280, [3]), (False, 272, [3])
+    ]
+    for cut in range(1, len(segs)):
+        first, pending, frames = stitch("f", "a", "b", segs[:cut])
+        if cut == 1:
+            assert (pending, frames) == (ccr[:30], [1])
+        second, pending, frames = stitch("f", "a", "b", segs[cut:], pending, frames)
+        assert first + second == whole
 
 
 @pytest.fixture(scope="module")

@@ -6,12 +6,21 @@ from __future__ import annotations
 
 import struct
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ingestor_etl_spark import capturegen as g
 from ingestor_etl_spark.protocols.diameter import _iter_avps, parse_message
-from ingestor_etl_spark.protocols.gsm_map import ber_children, ber_find
+from ingestor_etl_spark.protocols.gsm_map import (
+    ber_children,
+    ber_find,
+    parse_m3ua,
+    parse_mtp3,
+    parse_sccp,
+    parse_tcap,
+)
+from ingestor_etl_spark.protocols.gtp import parse_gtp
 from ingestor_etl_spark.protocols.gtp import tbcd as tbcd_decode
 from ingestor_etl_spark.protocols.net import iter_sctp_data_chunks
 from ingestor_etl_spark.protocols.smpp import parse_pdus
@@ -157,6 +166,40 @@ def test_ber_walk_never_overreads(buf):
     for tag, value, constructed in ber_children(buf):
         assert len(value) <= len(buf)
     ber_find(buf, 0x48)
+
+
+def _headed(*headers: bytes):
+    """Arbitrary bytes, half of them behind a header the parser
+    accepts, so the walk past the header sees arbitrary bytes too."""
+    tail = st.binary(max_size=96)
+    return st.one_of(tail, st.builds(bytes.__add__, st.sampled_from(headers), tail))
+
+
+# M3UA checks the message length against the chunk, so its header is
+# built per input; half the bodies open with the protocol-data tag.
+_M3UA_DATA = _headed(b"\x02\x10").map(
+    lambda body: b"\x01\x00\x01\x01" + struct.pack("!I", 8 + len(body)) + body
+)
+
+_PARSER_INPUTS = {
+    "gtp": (parse_gtp, _headed(b"\x32", b"\x48", b"\x4c")),
+    "m3ua": (parse_m3ua, st.one_of(st.binary(max_size=96), _M3UA_DATA)),
+    "mtp3": (parse_mtp3, _headed(b"\x03", b"\x83")),
+    "sccp": (parse_sccp, _headed(b"\x09", b"\x11", b"\x12", b"\x11\x00")),
+    "tcap": (parse_tcap, _headed(b"\x61", b"\x62", b"\x64", b"\x65", b"\x67")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PARSER_INPUTS))
+@settings(max_examples=500)
+@given(data=st.data())
+def test_parsers_never_raise_on_arbitrary_bytes(name, data):
+    """Capture bytes come from outside the program; these parsers
+    return None or partial fields on any input instead of raising, so
+    the ``except`` in ``protocols.rows.map_rows`` is defence in depth,
+    not the decode path."""
+    parse, inputs = _PARSER_INPUTS[name]
+    parse(data.draw(inputs))
 
 
 @given(st.integers(0, 2**32 - 1), st.integers(0, 2**32 - 1))

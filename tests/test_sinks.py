@@ -3,9 +3,17 @@ streaming dedup."""
 
 from __future__ import annotations
 
+import pytest
+
 from ingestor_etl_spark import capturegen as g
 from ingestor_etl_spark.sinks.jdbc import frames_list_as_string, with_epoch_columns
-from ingestor_etl_spark.sinks.ledger import append_ledger, current_ledger_state, file_counters, ledger_rows
+from ingestor_etl_spark.sinks.ledger import (
+    append_ledger,
+    current_ledger_state,
+    file_counters,
+    ledger_rows,
+    pending_files,
+)
 from ingestor_etl_spark.sinks.pcap_sink import write_pcap_files
 from ingestor_etl_spark.sources.pcap import read_pcap
 from ingestor_etl_spark.streaming.pipeline import stream_dedup
@@ -49,6 +57,26 @@ def test_ledger_lifecycle(spark, tmp_path):
     assert state.loc["a.pcap"].processed == 2
     assert state.loc["a.pcap"].not_processed == 1
     assert state.loc["b.pcap"].processed == 1
+
+
+@pytest.mark.parametrize("make", ["missing", "empty"])
+def test_pending_files_before_the_ledger_exists(spark, tmp_path, make):
+    """No ledger directory, or one with no parquet files yet: every
+    available file is pending."""
+    ledger = tmp_path / "ledger"
+    if make == "empty":
+        ledger.mkdir()
+    assert pending_files(spark, str(ledger), ["a.pcap", "b.pcap"]) == ["a.pcap", "b.pcap"]
+
+
+def test_pending_files_raises_on_a_corrupt_ledger(spark, tmp_path):
+    """A ledger that exists but cannot be read must not look empty:
+    that would re-ingest every file and append duplicate output."""
+    ledger = tmp_path / "ledger"
+    ledger.mkdir()
+    (ledger / "part-0.parquet").write_bytes(b"not a parquet file" * 8)
+    with pytest.raises(Exception):
+        pending_files(spark, str(ledger), ["a.pcap"])
 
 
 def test_stream_dedup(spark, tmp_path):
