@@ -8,7 +8,10 @@ with bidirectional msisdn/imsi enrichment, diameter.py:302-339).
 Spark shape:
 
     segments (net.expand_l4, port-3868 filter is native)
-      → groupBy(stream key) + applyInPandas stitcher   [R1/R2]
+      → repartition(stream key)                         [R1/R2]
+          + sortWithinPartitions(stream key, frame_no)
+          + mapInArrow walk: one pass per partition, ``stitch``
+          per row, pending bytes reset when the key changes
           one shuffle, partitioned exactly like the reference's
           reassembly dicts were keyed — but spillable and parallel
           across keys/files
@@ -28,9 +31,10 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterable, Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -70,6 +74,7 @@ MESSAGE_SCHEMA = StructType(
     ]
 )
 _COLS = [f.name for f in MESSAGE_SCHEMA.fields]
+_ARROW_SCHEMA = to_arrow_schema(MESSAGE_SCHEMA)
 
 # AVP code → output field for the simple string AVPs (P12).
 _STR_AVPS = {
@@ -161,8 +166,9 @@ def stitch(
     segments, in the order given, with the reference's
     stash-and-retry semantics. Returns one MESSAGE_SCHEMA row per
     complete message (watchdogs included) plus the bytes and frames
-    still pending, which a later call continues from: batch walks a
-    whole stream at once, streaming carries them in keyed state."""
+    still pending, which a later call continues from: batch carries
+    them from row to row of a key-sorted partition (``stitch_sorted``),
+    streaming across micro-batches in keyed state."""
     rows: list[tuple] = []
     for frame_no, ts_us, payload in segments:
         buf = pending + bytes(payload)
@@ -184,16 +190,6 @@ def stitch(
     return rows, pending, pending_frames
 
 
-def _stitch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """R1/R2 in batch: one whole stream, walked in frame order."""
-    pdf = pdf.sort_values("frame_no")
-    rows, _, _ = stitch(
-        pdf["file"].iloc[0], pdf["src_ip"].iloc[0], pdf["dst_ip"].iloc[0],
-        zip(pdf["frame_no"], pdf["ts_us"], pdf["payload"]),
-    )
-    return pd.DataFrame(rows, columns=_COLS)
-
-
 # The stream key mirrors the reference's reassembly dict keys: SCTP
 # (sid, ssn, src, dst) — diameter.py:52-71 — and the TCP flow 4-tuple
 # — diameter.py:74-96 — refined by file so captures never cross-talk.
@@ -210,6 +206,30 @@ def diameter_streams(segments: DataFrame) -> DataFrame:
     )
 
 
+def stitch_sorted(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """R1/R2 in batch: one walk over a partition of
+    ``diameter_streams`` rows sorted by stream key, then frame_no.
+    ``stitch`` runs per row; the pending bytes/frames carry to the next
+    row, across Arrow batches too, and reset when the key changes,
+    which drops a stream's unfinished tail. Keys are compared as
+    Python values, so the TCP streams' null SCTP ids match."""
+    key, pending, pending_frames = None, b"", []
+    for batch in batches:
+        rows: list[tuple] = []
+        for *k, frame_no, ts_us, payload in zip(*(c.to_pylist() for c in batch.columns)):
+            if k != key:
+                key, pending, pending_frames = k, b"", []
+            out, pending, pending_frames = stitch(
+                k[0], k[1], k[2], [(frame_no, ts_us, payload)], pending, pending_frames
+            )
+            rows += out
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(zip(*rows), _ARROW_SCHEMA.types)],
+                schema=_ARROW_SCHEMA,
+            )
+
+
 def drop_watchdogs(messages: DataFrame) -> DataFrame:
     """Device-Watchdog (cmd 280) is dropped natively after decode
     (diameter.py:128-130)."""
@@ -217,10 +237,14 @@ def drop_watchdogs(messages: DataFrame) -> DataFrame:
 
 
 def decode_diameter(segments: DataFrame) -> DataFrame:
-    """Port-filtered segments → one row per Diameter message, one
-    ``applyInPandas`` stitch group per stream key."""
-    msgs = diameter_streams(segments).groupBy(*STREAM_KEY).applyInPandas(
-        _stitch_group, MESSAGE_SCHEMA
+    """Port-filtered segments → one row per Diameter message: one
+    exchange on the stream key, then one ``stitch_sorted`` walk per
+    key-sorted partition."""
+    msgs = (
+        diameter_streams(segments)
+        .repartition(*STREAM_KEY)
+        .sortWithinPartitions(*STREAM_KEY, "frame_no")
+        .mapInArrow(stitch_sorted, MESSAGE_SCHEMA)
     )
     return drop_watchdogs(msgs).withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 

@@ -191,3 +191,96 @@ def test_no_cross_file_stitching(spark, tmp_path):
     (tmp_path / "c_only" / "c.pcap").write_bytes(both)
     msgs2 = decode_diameter(expand_l4(read_pcap(spark, str(tmp_path / "c_only"))))
     assert msgs2.count() == 1
+
+
+def _stream_mix_capture() -> bytes:
+    """One TCP stream with a CCR split over three segments, then two
+    requests coalesced in one segment with a DWR between them; two
+    SCTP streams whose fragments interleave; one SCTP retransmit;
+    two answers bundled in one frame on one stream key; and a TCP
+    stream that ends mid-message (its tail is dropped)."""
+    import struct
+
+    def msg(cmd, request, hbh, session, *avps):
+        return g.diameter_msg(cmd, request, hbh, hbh, [g.diameter_avp(263, session), *avps])
+
+    ccr1, ccr2, ccr3 = (
+        msg(272, True, i, b"tcp;%d" % i, g.subscription_id(0, f"52155500{i:02d}")) for i in (1, 2, 3)
+    )
+    dwr = msg(280, True, 9, b"dw")
+    x, y, z = (msg(272, True, i, b"sctp;%d" % i) for i in (11, 12, 13))
+    ok = g.diameter_avp(268, struct.pack("!I", 2001))
+    a, b = (msg(272, False, i, b"sctp;%d" % i, ok) for i in (11, 12))
+    tail = msg(272, True, 99, b"tail")
+
+    def tcp(payload, seq, sport=50000):
+        return g.eth(g.ipv4(g.tcp(payload, sport, 3868, seq=seq, ack=1), 6))
+
+    def sctp(chunks, sport=40001, dport=3868, **ips):
+        return g.eth(g.ipv4(g.sctp(chunks, sport, dport), 132, **ips))
+
+    third = len(ccr1) // 3
+    frames = [
+        tcp(ccr1[:third], 1),
+        sctp([(1, 5, 46, x[:20])]),
+        tcp(ccr1[third : 2 * third], 1 + third),
+        sctp([(2, 5, 46, y[:30])]),
+        tcp(ccr1[2 * third :], 1 + 2 * third),
+        sctp([(1, 5, 46, x[20:])]),
+        tcp(ccr2 + dwr + ccr3, 1 + len(ccr1)),
+        sctp([(2, 5, 46, y[30:])]),
+        sctp([(1, 6, 46, z)]),
+        tcp(tail[:20], 1, sport=50001),
+        sctp([(1, 6, 46, z)]),
+        sctp([(3, 0, 46, a), (3, 0, 46, b)], 3868, 40001, src="10.0.0.2", dst="10.0.0.1"),
+    ]
+    return g.pcap([(1700, i, f) for i, f in enumerate(frames)])
+
+
+@pytest.mark.parametrize("seed,partitions", [(1, 1), (2, 3), (3, 7)])
+def test_decode_diameter_scrambled_across_tiny_arrow_batches(spark, tmp_path, seed, partitions):
+    """The batch stitch walk carries a stream's pending bytes across
+    Arrow batch boundaries and keys TCP streams by their null SCTP
+    ids. With two-row Arrow batches and the segments scrambled over
+    ``partitions`` partitions, ``decode_diameter`` gives exactly the
+    rows of ``stitch`` run per stream in frame order."""
+    from collections import defaultdict
+
+    from pyspark.sql import functions as F
+
+    from ingestor_etl_spark.protocols.diameter import (
+        CMD_DEVICE_WATCHDOG,
+        MESSAGE_SCHEMA,
+        STREAM_KEY,
+        diameter_streams,
+    )
+
+    p = tmp_path / "mix.pcap"
+    p.write_bytes(_stream_mix_capture())
+    segments = expand_l4(read_pcap(spark, str(p)))
+
+    streams = defaultdict(list)
+    for r in diameter_streams(segments).collect():
+        streams[tuple(r[c] for c in STREAM_KEY)].append((r.frame_no, r.ts_us, r.payload))
+    expected = [
+        row
+        for key, segs in streams.items()
+        for row in stitch(*key[:3], sorted(segs, key=lambda s: s[0]))[0]
+        if row[6] != CMD_DEVICE_WATCHDOG
+    ]
+    assert len(streams) == 6  # 2 TCP flows + 4 SCTP (sid, ssn) keys
+    # the DWR and the TCP tail yield nothing; the retransmit yields twice;
+    # the two interleaved SCTP messages span two frames, the split CCR
+    # three, so two-row batches cut it whatever the partition layout
+    assert sorted(len(r[1]) for r in expected) == [1] * 6 + [2, 2, 3]
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        scrambled = segments.orderBy(F.rand(seed)).repartition(partitions)
+        out = decode_diameter(scrambled).withColumn("ts_us", F.unix_micros("ts"))
+        got = [tuple(r) for r in out.select(*MESSAGE_SCHEMA.fieldNames()).collect()]
+    finally:
+        spark.conf.set(conf, before)
+    assert sorted(got, key=repr) == sorted(expected, key=repr)

@@ -165,31 +165,42 @@ def _formatted(df):
 
 def test_diameter_port_filter_below_stitch(spark, tmp_path):
     """The 3868 port gate must run BEFORE the reassembly shuffle +
-    FlatMapGroupsInPandas stitcher — i.e. appear deeper in the plan
-    tree — so non-Diameter traffic never reaches Python or the wire.
-    Pins the decode subtree to exactly one exchange (the stream-key
-    groupBy)."""
+    MapInArrow stitch walk — i.e. appear deeper in the plan tree — so
+    non-Diameter traffic never reaches Python or the wire. Pins the
+    decode subtree to exactly one exchange (the stream-key
+    repartition) and to no per-group pandas stitcher."""
     import re
 
     decoded, _ = _diameter_correlated(spark, tmp_path)
     facts = plan_facts(decoded)
     assert facts["n_exchanges"] == 1, facts
     txt = _formatted(decoded)
+    assert "FlatMapGroupsInPandas" not in txt, txt
     tree = txt.split("\n\n")[0].splitlines()
     # conditions live in the numbered detail entries; map the ids of
     # Filters mentioning the port back to their tree positions
     port_ids = re.findall(r"\((\d+)\) Filter\nInput.*\nCondition : .*3868", txt)
     assert port_ids, txt
-    stitch = next(i for i, ln in enumerate(tree) if "FlatMapGroupsInPandas" in ln)
+    stitch = next(i for i, ln in enumerate(tree) if "MapInArrow" in ln)
     positions = [
         next(i for i, ln in enumerate(tree) if f"({pid})" in ln) for pid in port_ids
     ]
     assert all(i > stitch for i in positions), (stitch, positions)
 
 
+def test_diameter_decode_python_operators_are_audited(spark, tmp_path):
+    """The executed decode runs three Python operators — the capture
+    parse, the L2-L4 expansion and the stitch walk — and the audit
+    must see all three, whichever Arrow/pandas operator each uses."""
+    from ingestor_etl_spark.plans.audit import executed_facts
+
+    decoded, _ = _diameter_correlated(spark, tmp_path)
+    assert executed_facts(decoded)["exec_pyevals"] == 3
+
+
 def test_j1_correlate_exchange_budget(spark, tmp_path):
     """J1 full-outer correlation on top of the decode: exactly three
-    exchanges total — one for the decode groupBy, one per join side
+    exchanges total — one for the decode repartition, one per join side
     on the transaction key (the request side's doubles as the
     retransmission-dedup aggregation). Any extra exchange is a plan
     regression."""

@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ingestor_etl_spark import capturegen as g
-from ingestor_etl_spark.protocols.diameter import _iter_avps, parse_message
+from ingestor_etl_spark.protocols.diameter import _iter_avps, parse_message, stitch
 from ingestor_etl_spark.protocols.gsm_map import (
     ber_children,
     ber_find,
@@ -181,7 +181,46 @@ _M3UA_DATA = _headed(b"\x02\x10").map(
     lambda body: b"\x01\x00\x01\x01" + struct.pack("!I", 8 + len(body)) + body
 )
 
+# Diameter messages carry a consistent length; the AVP area is
+# arbitrary bytes, or AVPs the parser reads (grouped ones included)
+# around arbitrary data.
+_DIAMETER_AVPS = st.one_of(
+    st.binary(max_size=96),
+    st.lists(
+        st.builds(
+            g.diameter_avp,
+            st.sampled_from([1, 263, 268, 297, 298, 443, 444, 450]),
+            st.binary(max_size=24),
+        ),
+        max_size=4,
+    ).map(b"".join),
+)
+_DIAMETER = st.one_of(
+    st.binary(max_size=96),
+    st.builds(
+        lambda hdr, avps: b"\x01" + (20 + len(avps)).to_bytes(3, "big") + hdr + avps,
+        st.binary(min_size=16, max_size=16),
+        _DIAMETER_AVPS,
+    ),
+)
+
+
+def _cut(buf: bytes, cuts: list[int]) -> list[tuple[int, int, bytes]]:
+    """``buf`` as (frame_no, ts_us, payload) segments split at ``cuts``."""
+    points = sorted({0, len(buf), *(c for c in cuts if c < len(buf))})
+    return [(i, i, buf[a:b]) for i, (a, b) in enumerate(zip(points, points[1:]))]
+
+
+# One stream of a few such messages, cut into segments anywhere.
+_DIAMETER_SEGMENTS = st.builds(
+    _cut,
+    st.lists(_DIAMETER, min_size=1, max_size=3).map(b"".join),
+    st.lists(st.integers(0, 300), max_size=5),
+)
+
 _PARSER_INPUTS = {
+    "diameter": (parse_message, _DIAMETER),
+    "stitch": (lambda segments: stitch("f", "a", "b", segments), _DIAMETER_SEGMENTS),
     "gtp": (parse_gtp, _headed(b"\x32", b"\x48", b"\x4c")),
     "m3ua": (parse_m3ua, st.one_of(st.binary(max_size=96), _M3UA_DATA)),
     "mtp3": (parse_mtp3, _headed(b"\x03", b"\x83")),
@@ -197,7 +236,8 @@ def test_parsers_never_raise_on_arbitrary_bytes(name, data):
     """Capture bytes come from outside the program; these parsers
     return None or partial fields on any input instead of raising, so
     the ``except`` in ``protocols.rows.map_rows`` is defence in depth,
-    not the decode path."""
+    not the decode path. The Diameter stitch walk has no per-row
+    ``except`` at all: a raise there would fail the whole ingest."""
     parse, inputs = _PARSER_INPUTS[name]
     parse(data.draw(inputs))
 
@@ -215,33 +255,48 @@ def test_tcap_tid_padding(otid, dtid):
 
 
 @settings(max_examples=25)
-@given(st.permutations(list(range(6))))
-def test_reassembly_order_invariance(order):
-    """Batch reassembly sorts by frame_no before stitching, so any
-    arrival permutation of the same segments yields the same
-    messages (SURVEY §7.4 order-sensitivity requirement)."""
-    import pandas as pd
+@given(st.permutations(list(range(12))), st.integers(1, 12))
+def test_reassembly_order_invariance(order, batch_rows):
+    """Batch reassembly sorts each partition by stream key, then
+    frame_no, and walks it with ``stitch_sorted``. So any arrival
+    permutation of two interleaved streams' segments — one TCP stream
+    (null SCTP ids), one SCTP stream — cut into Arrow batches of any
+    size, yields the messages of ``stitch`` run per stream (SURVEY
+    §7.4 order-sensitivity requirement)."""
+    import pyarrow as pa
 
-    from ingestor_etl_spark.protocols.diameter import _stitch_group
+    from ingestor_etl_spark.protocols.diameter import STREAM_KEY, stitch_sorted
 
     msg = g.diameter_msg(272, True, 7, 9, [g.diameter_avp(263, b"abcdef")])
     # six 1-byte-overlapping slices of two messages back to back
     stream = msg + g.diameter_msg(272, False, 7, 9, [g.diameter_avp(268, struct.pack("!I", 2001))])
     cuts = [0, 11, 17, 29, 41, 53, len(stream)]
-    segs = [(i + 1, stream[cuts[i] : cuts[i + 1]]) for i in range(6)]
-    pdf = pd.DataFrame(
-        {
-            "file": "f",
-            "frame_no": [segs[i][0] for i in order],
-            "ts_us": [1000 + segs[i][0] for i in order],
-            "payload": [segs[i][1] for i in order],
-            "src_ip": "a",
-            "dst_ip": "b",
-        }
+    tcp = ("f", "a", "b", 50000, 3868, None, None)
+    sctp = ("f", "a", "b", 40001, 3868, 1, 7)
+    # the two streams' frames interleave: TCP odd, SCTP even
+    rows = [
+        (*key, 2 * i + first, 1000 + 2 * i + first, stream[cuts[i] : cuts[i + 1]])
+        for key, first in ((tcp, 1), (sctp, 2))
+        for i in range(6)
+    ]
+    # sortWithinPartitions(*STREAM_KEY, "frame_no"): ascending, nulls first
+    arrived = sorted(
+        (rows[i] for i in order),
+        key=lambda r: ([(v is not None, v) for v in r[:7]], r[7]),
     )
-    out = _stitch_group(pdf)
-    assert len(out) == 2
-    assert sorted(out["request"]) == [False, True]
+    names = [*STREAM_KEY, "frame_no", "ts_us", "payload"]
+    batches = [
+        pa.RecordBatch.from_pylist([dict(zip(names, r)) for r in arrived[i : i + batch_rows]])
+        for i in range(0, len(arrived), batch_rows)
+    ]
+    out = [tuple(r.values()) for b in stitch_sorted(batches) for r in b.to_pylist()]
+    expected = [
+        row
+        for key in (tcp, sctp)
+        for row in stitch(*key[:3], [r[7:] for r in rows if r[:7] == key])[0]
+    ]
+    assert len(out) == 4
+    assert sorted(out, key=repr) == sorted(expected, key=repr)
 
 
 # ---------------------------------------------------------------------------
